@@ -5,23 +5,8 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the app-lifetime memos store SERIALIZED (see GraphBuilder
-      // .fromTpch); UnsafeRow is KryoSerializable, and Kryo reads a
-      // block as straight byte copies where JavaSerializer pays an
-      // ObjectInputStream state machine per row (measured: the sf10
-      // graph memo scan sat in readObject0 on all threads)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.cpus(32)
+    val spark = graft.core.GraftSession.local(cpus)
     // untimed JVM/session warm-up: one trivial shuffle job so the first
     // measured query doesn't absorb classloading + codegen compiler
     // startup (~4 s) — standard latency-bench hygiene; wall-clock still
@@ -55,14 +40,6 @@ object Bench {
     val only = args.headOption.map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // memo-storage budget (r14): the app-lifetime checkpoint memos are
-    // LRU-trimmed at every entry boundary once their memory-resident
-    // blocks exceed this — at sf10 the 260 entries' memos otherwise
-    // BECOME the heap (GC thrash, SCALING sf10 addendum #3). Default:
-    // a quarter of the heap, leaving storage eviction headroom.
-    val memoBudget = sys.env.get("SPARK_GRAFT_MEMO_BUDGET_MB")
-      .map(_.toLong * (1L << 20))
-      .getOrElse(Runtime.getRuntime.maxMemory / 4)
     def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()
@@ -74,8 +51,8 @@ object Bench {
       val wall = (System.nanoTime() - t0) / 1e9
       // entry boundary = the only safe eviction point (no in-flight
       // plan holds a memo frame); timed AFTER the measurement so the
-      // trim never bills the entry
-      val (nEv, freed) = graft.core.AppCache.trimToBudget(spark, memoBudget)
+      // trim never bills the entry (budget: AppCache.defaultBudgetBytes)
+      val (nEv, freed) = graft.core.AppCache.trimToBudget(spark)
       if (nEv > 0) System.err.println(
         s"[bench] memo trim after $name: $nEv entries, ${freed >> 20} MB released")
       (wall, err)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -11,27 +10,8 @@ object Verify {
     // optional third arg: comma-separated query names (local iteration;
     // the driver always calls with two args = full dump)
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS), which Spark 4 rejects;
-      // read as long and convert in graft.core.Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Kryo for the serialized memo blocks (see Bench)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
-    // same entry-boundary memo trim as Bench (r14): the dump visits all
-    // 260 entries in one app, so the checkpoint memos need the budget
-    val memoBudget = sys.env.get("SPARK_GRAFT_MEMO_BUDGET_MB")
-      .map(_.toLong * (1L << 20))
-      .getOrElse(Runtime.getRuntime.maxMemory / 4)
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -39,7 +19,9 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        graft.core.AppCache.trimToBudget(spark, memoBudget)
+        // same entry-boundary memo trim as Bench (r14): the dump visits
+        // all 260 entries in one app, so the checkpoint memos need the budget
+        graft.core.AppCache.trimToBudget(spark)
       }
       catch { case e: Throwable =>
         // a failed entry must still produce an output row: a one-row

@@ -1310,11 +1310,13 @@ object Relational {
     val best = supply.groupBy("partkey")
       .agg(min("unit_millicents").as("mn"))
       .withColumnRenamed("partkey", "best_partkey")
+    // no forced broadcast: best and smallPart are part-cardinality and
+    // grow with SF, so AQE picks the join from runtime sizes
     supply
-      .join(broadcast(best),
+      .join(best,
         col("partkey") === col("best_partkey") &&
           col("unit_millicents") === col("mn"))
-      .join(broadcast(smallPart), col("p_partkey") === supply("partkey"))
+      .join(smallPart, col("p_partkey") === supply("partkey"))
       .join(spark.table("supplier"), col("s_suppkey") === col("suppkey"))
       .select(col("p_partkey"), col("p_name"), col("s_name"),
         col("s_acctbal"), col("unit_millicents"))

@@ -25,7 +25,7 @@ object AppCache {
   // memos then silently never trimmed — and (b) re-add the same map
   // after its contents (and hash) changed, duplicating it in every
   // enumeration. Both observed (SerializationHygieneSpec's columnar
-  // trim test caught (a); the trim debug listing showed (b)).
+  // trim test caught (a); a per-entry trim listing showed (b)).
   private val registry = java.util.Collections.synchronizedSet(
     java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[ConcurrentHashMap[_, _], java.lang.Boolean]()))
@@ -78,6 +78,14 @@ object AppCache {
       case _ => Seq.empty
     }
 
+  /** Memo-storage budget for the entry-boundary trim: at sf10 the 260
+    * entries' memos otherwise BECOME the heap (GC thrash, SCALING sf10
+    * addendum #3). `SPARK_GRAFT_MEMO_BUDGET_MB` when set, else a
+    * quarter of the heap, leaving storage eviction headroom. */
+  lazy val defaultBudgetBytes: Long = sys.env.get("SPARK_GRAFT_MEMO_BUDGET_MB")
+    .map(_.toLong * (1L << 20))
+    .getOrElse(Runtime.getRuntime.maxMemory / 4)
+
   /** Budget-aware LRU eviction of the checkpoint-backed memo values —
     * called at ENTRY BOUNDARIES (Bench/Verify, between queries: the
     * one point where no in-flight plan can still hold an evicted
@@ -92,7 +100,7 @@ object AppCache {
     * being app-lifetime once it stops fitting. Returns
     * (entriesEvicted, bytesReleased). */
   def trimToBudget(spark: org.apache.spark.sql.SparkSession,
-                   budgetBytes: Long): (Int, Long) = {
+                   budgetBytes: Long = defaultBudgetBytes): (Int, Long) = {
     import scala.jdk.CollectionConverters._
     val memBytes = spark.sparkContext.getRDDStorageInfo
       .map(i => i.id -> i.memSize).toMap
@@ -135,9 +143,6 @@ object AppCache {
     // total over DISTINCT rdds (two entries may share one frame)
     var total = refs.keys.map(memBytes.getOrElse(_, 0L)).sum
     var freed = 0L; var n = 0
-    if (sys.env.contains("GRAFT_TRIM_DEBUG")) ents.foreach(e =>
-      System.err.println(s"[trim] key=${e.key} rdds=${e.rdds.map(_._1)} " +
-        s"bytes=${e.bytes} touch=${e.touch}"))
     for (e <- ents.sortBy(_.touch) if total > budgetBytes && e.bytes > 0) {
       e.cache.asInstanceOf[ConcurrentHashMap[Any, Any]].remove(e.key)
       lastTouch.remove(new IdKey(e.cache, e.key))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executable end-to-end quickstart — the reference user's whole journey
@@ -22,11 +21,7 @@ import org.apache.spark.sql.functions._
 object Quickstart {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.cpus(8))
     spark.sparkContext.setLogLevel("ERROR")
 
     println(s"== 1. property graph from $dir ==")

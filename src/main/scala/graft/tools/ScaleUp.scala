@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-sweep data generator: tiles a driver testdata SF directory
@@ -120,15 +120,8 @@ object ScaleUp {
     require(copies >= 1 && copies <= familySize,
       s"copies=$copies out of [1, $familySize]: the per-copy affine-cipher " +
         s"family has $familySize members — pick <= $familySize copies or extend the perturbation")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.cpus(32)
+    val spark = graft.core.GraftSession.local(cpus)
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
@@ -164,7 +157,7 @@ object ScaleUp {
       // copies-× explosion fans out across cores pre-explosion —
       // repartitioning the tiled result instead would shuffle
       // copies-times the bytes for the same parallelism
-      val df0 = read(name).repartition(cpus.toInt)
+      val df0 = read(name).repartition(cpus)
       val cols = df0.columns
       val tiled0 = df0.crossJoin(
         broadcast(spark.range(copies.toLong).toDF("__c")))

@@ -151,23 +151,6 @@ class CatalogPlanContractSpec extends SparkSpec {
         val plan = df.queryExecution.executedPlan.toString
           .split("== Initial Plan ==")(0)
         swept += 1
-        // drain this entry's construction-time plans (flush the async
-        // bus first so attribution by position is exact)
-        org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
-        var ev = ctorPlans.poll()
-        while (ev != null) {
-          val (func, cplan) = ev
-          if (cplan.contains("CartesianProduct"))
-            failures += s"$name: CartesianProduct in a construction-time plan ($func)"
-          if (cplan.contains("BroadcastNestedLoopJoin")) {
-            sawCtorBnlj += name
-            if (!bnljConstructionRegistered.contains(name))
-              failures += (s"$name: unregistered BroadcastNestedLoopJoin in a " +
-                s"construction-time plan ($func) — register the bounded build " +
-                "side or fix the join")
-          }
-          ev = ctorPlans.poll()
-        }
         if (plan.contains("CartesianProduct"))
           failures += s"$name: CartesianProduct in the final plan"
         if (plan.contains("SortMergeJoin")) {
@@ -186,6 +169,26 @@ class CatalogPlanContractSpec extends SparkSpec {
       } catch { case e: Throwable =>
         failures += s"$name: failed to execute: ${e.getClass.getName}: " +
           String.valueOf(e.getMessage).take(200)
+      } finally {
+        // drain this entry's construction-time plans (flush the async
+        // bus first so attribution by position is exact) — in a
+        // finally, so a throwing entry's plans are charged to it and
+        // not to the next entry
+        org.apache.spark.sql.GraftColumnBridge.flushListenerBus(spark)
+        var ev = ctorPlans.poll()
+        while (ev != null) {
+          val (func, cplan) = ev
+          if (cplan.contains("CartesianProduct"))
+            failures += s"$name: CartesianProduct in a construction-time plan ($func)"
+          if (cplan.contains("BroadcastNestedLoopJoin")) {
+            sawCtorBnlj += name
+            if (!bnljConstructionRegistered.contains(name))
+              failures += (s"$name: unregistered BroadcastNestedLoopJoin in a " +
+                s"construction-time plan ($func) — register the bounded build " +
+                "side or fix the join")
+          }
+          ev = ctorPlans.poll()
+        }
       }
     }
     spark.listenerManager.unregister(listener)
@@ -230,8 +233,6 @@ class CatalogPlanContractSpec extends SparkSpec {
       "Louvain.scala:parts" -> (1, "graph constants m2/selfW, one 2-row readout per level"),
       "Louvain.scala:modularityFromParts" -> (1, "composed-Q scalars, one 2-row readout per level"),
       "Louvain.scala:localMoves" -> (1, "per-round convergence scalars, one 3-row readout per round"),
-      "LouvainDebug.scala:main" -> (1, "debug main, not a catalog path"),
-      "SpPlanCheck.scala:audit" -> (2, "plan-audit scratch driver, not a catalog path: materialize + inspect the executed round plan"),
       "Metrics.scala:aucDistributed" -> (1, "rank-AUC dense leg behind the 1M gate, histogram fallback"),
       "Metrics.scala:binaryAucsDistributed" -> (1, "same gate as aucDistributed, batched variant"),
       "ScaleOps.scala:drainDrop" -> (1, "foreachBatch audit sink, O(windows in horizon) not O(events)"),
@@ -283,5 +284,33 @@ class CatalogPlanContractSpec extends SparkSpec {
       "collect() census drifted — audit the new/removed/moved site, then " +
         s"update the registry.\n  unregistered or count-changed: ${extra.toSeq.sorted}" +
         s"\n  registered but gone/count-changed: ${missing.toSeq.sorted}")
+  }
+
+  test("one session factory and no env-gated debug forks: source census") {
+    // every entry point starts Spark through graft.core.GraftSession, so
+    // the tour, the tests and the benchmarks run one configuration; and
+    // no GRAFT_*_DEBUG switch may fork the executed program. Needles are
+    // split so this file does not match itself.
+    import scala.jdk.CollectionConverters._
+    def sources(root: String): Seq[(String, String)] = {
+      val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8))
+        .toList
+      finally stream.close()
+    }
+    val factoryCall = "SparkSession" + ".builder"
+    val strays = sources("src").collect {
+      case (path, src) if src.contains(factoryCall) &&
+        !path.endsWith("/GraftSession.scala") => path
+    }
+    assert(strays.isEmpty,
+      s"$factoryCall outside GraftSession.scala — use GraftSession.local: $strays")
+    val debugEnv = ("GRAFT_" + """\w+_DEBUG""").r
+    val switches = sources("src/main").flatMap { case (path, src) =>
+      debugEnv.findAllIn(src).map(m => s"$path: $m")
+    }
+    assert(switches.isEmpty, s"env-gated debug switches in src/main: $switches")
   }
 }

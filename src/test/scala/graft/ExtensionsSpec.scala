@@ -29,6 +29,23 @@ class ExtensionsSpec extends SparkSpec {
     assert(sh === Seq("abc", "bcd", "cde"))
   }
 
+  test("GraftSession sessions carry Kryo, UTC, nanosAsLong and both Graft planner extensions") {
+    // SparkSpec.session is built by GraftSession.local, the factory every
+    // main uses, so the suites test the configuration the engine ships
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.serializer") ===
+      "org.apache.spark.serializer.KryoSerializer")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "8")
+    assert(spark.sessionState.planner.extraPlanningStrategies
+      .exists(_.getClass.getName.contains("AsOfJoinStrategy")) ||
+      spark.sessionState.planner.strategies
+        .exists(_.getClass.getName.contains("AsOfJoinStrategy")))
+    assert(spark.sessionState.optimizer.extendedOperatorOptimizationRules
+      .exists(_.getClass.getName.contains("IntegerizeSampleFilter")))
+  }
+
   test("sorted_intersect_count equals size(array_intersect) on sorted distinct arrays") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -11,39 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // same extension set as Verify/Bench: the suites must test the
-      // plans the engine actually ships (incl. IntegerizeSampleFilter)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // getOrCreate silently DROPS withExtensions when some earlier code
-    // already created the JVM's default session. Fail loudly here rather
-    // than let the whole suite audit plans the shipping engine doesn't
-    // produce (round-9 postmortem: ExtensionsSpec ran first with a bare
-    // getOrCreate and disabled AsOfJoinStrategy JVM-wide).
-    require(
-      s.sessionState.planner.extraPlanningStrategies
-        .exists(_.getClass.getName.contains("AsOfJoinStrategy")) ||
-      s.sessionState.planner.strategies
-        .exists(_.getClass.getName.contains("AsOfJoinStrategy")),
-      "GraftExtensions not installed: AsOfJoinStrategy missing from the " +
-        "planner — a default session was created before SparkSpec.session " +
-        "(getOrCreate-drops-extensions trap)")
-    require(
-      s.sessionState.optimizer.extendedOperatorOptimizationRules
-        .exists(_.getClass.getName.contains("IntegerizeSampleFilter")),
-      "GraftExtensions not installed: IntegerizeSampleFilter missing from " +
-        "the optimizer's extended rules")
-    s
-  }
+  // the engine's own session config (graft.core.GraftSession), at a
+  // fixed width so plan and partition assertions don't vary by host
+  lazy val session: SparkSession = graft.core.GraftSession.local(8,
+    Some(java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }
